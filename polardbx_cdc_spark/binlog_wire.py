@@ -1646,6 +1646,19 @@ def encode_rotate(next_file: str, position: int = 4) -> bytes:
     )
 
 
+def _copy_fields(fields: dict) -> dict:
+    """Fresh containers for a decoded TABLE_MAP's fields (labels lists
+    included), so no event shares a mutable value with another."""
+    out = {}
+    for k, v in fields.items():
+        if isinstance(v, dict):
+            v = {c: list(x) if isinstance(x, list) else x for c, x in v.items()}
+        elif isinstance(v, (list, set)):
+            v = type(v)(v)
+        out[k] = v
+    return out
+
+
 def decode_events(buf: bytes, verify_crc: bool = True,
                   tolerate_truncation: bool = False) -> list[dict]:
     """Parse a byte stream of events (no file magic) into dicts:
@@ -1669,6 +1682,8 @@ def decode_events(buf: bytes, verify_crc: bool = True,
     server_version field) have no alg byte and imply no checksums."""
     events: list[dict] = []
     tables: dict[int, TableDef] = {}
+    #: TABLE_MAP body bytes → (table id, TableDef, event fields)
+    table_maps: dict[bytes, tuple[int, TableDef, dict]] = {}
     pos = 0
     csum = CHECKSUM_LEN  # per-stream trailer width, set by each FDE
     while pos < len(buf):
@@ -1717,6 +1732,17 @@ def decode_events(buf: bytes, verify_crc: bool = True,
             # post-header-table width, not an algorithm
             ev["checksum_alg"] = body[-1] if fde_has_alg else None
         elif tc == TABLE_MAP_EVENT:
+            # a stream re-maps its few tables before every ROWS event:
+            # the same body bytes (table id included) reuse the parsed
+            # TableDef, so its compiled cell decoders too
+            key = bytes(body)
+            hit = table_maps.get(key)
+            if hit is not None:
+                tables[hit[0]] = hit[1]
+                ev.update(_copy_fields(hit[2]))
+                events.append(ev)
+                pos += elen
+                continue
             tid = int.from_bytes(body[0:6], "little")
             p = 8
             dlen = body[p]
@@ -1891,7 +1917,7 @@ def decode_events(buf: bytes, verify_crc: bool = True,
                     ],
                     _es_codec,
                 )
-            tables[tid] = TableDef(
+            tables[tid] = td = TableDef(
                 db, tbl, types, unsigned, col_names=col_names, pk=pk,
                 enum_labels=enum_labels, set_labels=set_labels,
                 charsets=charsets, default_charset=default_cs,
@@ -1899,29 +1925,32 @@ def decode_events(buf: bytes, verify_crc: bool = True,
                 pk_prefixes=pk_prefixes, enum_set_charsets=es_charsets,
                 enum_set_default_charset=es_default_cs,
             )
-            ev.update(table_id=tid, db=db, tbl=tbl, types=types, unsigned=unsigned)
+            fields: dict = dict(table_id=tid, db=db, tbl=tbl, types=types,
+                                unsigned=unsigned)
             if charsets or default_cs is not None:
-                ev["charsets"] = dict(charsets)
+                fields["charsets"] = charsets
                 if default_cs is not None:
-                    ev["default_charset"] = default_cs
+                    fields["default_charset"] = default_cs
             if geometry_types:
-                ev["geometry_types"] = dict(geometry_types)
+                fields["geometry_types"] = geometry_types
             if invisible:
-                ev["invisible_columns"] = sorted(invisible)
+                fields["invisible_columns"] = sorted(invisible)
             if col_names is not None:
-                ev["col_names"] = col_names
+                fields["col_names"] = col_names
             if pk is not None:
-                ev["pk_columns"] = pk
+                fields["pk_columns"] = pk
             if pk_prefixes:
-                ev["pk_prefixes"] = dict(pk_prefixes)
+                fields["pk_prefixes"] = pk_prefixes
             if enum_labels:
-                ev["enum_labels"] = enum_labels
+                fields["enum_labels"] = enum_labels
             if set_labels:
-                ev["set_labels"] = set_labels
+                fields["set_labels"] = set_labels
             if es_charsets or es_default_cs is not None:
-                ev["enum_set_charsets"] = dict(es_charsets)
+                fields["enum_set_charsets"] = es_charsets
                 if es_default_cs is not None:
-                    ev["enum_set_default_charset"] = es_default_cs
+                    fields["enum_set_default_charset"] = es_default_cs
+            table_maps[key] = (tid, td, fields)
+            ev.update(_copy_fields(fields))
         elif tc in ROWS_EVENTS:
             tid = int.from_bytes(body[0:6], "little")
             td = tables[tid]
@@ -1978,9 +2007,9 @@ def decode_events(buf: bytes, verify_crc: bool = True,
             if tc in UPDATE_EVENTS and not all(pa):
                 ev["present_columns_after"] = [i for i, x in enumerate(pa) if x]
             if td.col_names is not None:
-                ev["col_names"] = td.col_names
+                ev["col_names"] = list(td.col_names)
                 if td.pk is not None:
-                    ev["pk_columns"] = td.pk
+                    ev["pk_columns"] = list(td.pk)
         elif tc == QUERY_EVENT:
             _tid, _et, dlen, _ec, svlen = struct.unpack_from("<IIBHH", body, 0)
             p = 13 + svlen

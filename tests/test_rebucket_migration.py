@@ -125,10 +125,12 @@ def test_agg_view_sink_migrates_and_view_stays_correct(spark, tmp_path):
     sink.bucket_floor = 10
     sink.rebucket_cap = 50
 
-    b1 = spark.createDataFrame(_events(spark, 300, "A").collect(), _SCHEMA)
+    # 30 rows per writer core sit inside the [floor, cap] band of 10-50
+    # rows per bucket on any core count → one bucket per writer core
+    rows = 30 * spark.sparkContext.defaultParallelism
+    b1 = spark.createDataFrame(_events(spark, rows, "A").collect(), _SCHEMA)
     sink(b1, batch_id=0)
     n0 = sink.n_buckets
-    # 300 rows sit inside the band → one bucket per writer core
     assert n0 == spark.sparkContext.defaultParallelism
     assert sink.last_migration is None
 

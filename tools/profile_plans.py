@@ -1,18 +1,17 @@
 #!/usr/bin/env python
-"""Round-14 optimization harness: per-query timings + formatted plans.
+"""Per-query timings + formatted plans, for before/after deltas.
 
 Usage:
-    python tools/profile_r14.py <out_tag> [query1,query2,...]
+    python tools/profile_plans.py <plans_dir> <out_tag> [query1,query2,...]
 
-For each selected HEADLINE query: warm-up run, best-of-2 timed runs
-(the bench.py methodology — .count() on the returned frame), and the
-.explain("formatted") text written to $SPARK_GRAFT_PLANS_DIR (default
-<repo>/plans/r14)/<query>_<out_tag>.txt. Timings land in
+For each selected HEADLINE query (all of bench.HEADLINE by default):
+warm-up run, best-of-2 timed runs (the bench.py methodology — .count()
+on the returned frame), and the .explain("formatted") text written to
+<plans_dir>/<query>_<out_tag>.txt. Timings land in
 <plans_dir>/timings_<out_tag>.json. Uses the same session factory and
 $SPARK_GRAFT_* contract as bench.py so numbers are comparable
-run-to-run (NOT to the driver's official artifact — this tool exists
-for before/after deltas while optimizing; $SPARK_GRAFT_PLANS_DIR lets
-the round-start worktree write its "before" dumps into the main repo).
+run-to-run. Point a second checkout's run at the same plans_dir to dump
+its "before" plans beside this one's.
 """
 
 from __future__ import annotations
@@ -29,20 +28,19 @@ from polardbx_cdc_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    plans_dir, tag = sys.argv[1], sys.argv[2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    plans_dir = os.environ.get(
-        "SPARK_GRAFT_PLANS_DIR", os.path.join(repo, "plans", "r14"))
     os.makedirs(plans_dir, exist_ok=True)
 
     import bench  # noqa: E402  (HEADLINE list)
 
     names = list(bench.HEADLINE)
-    if len(sys.argv) > 2:
-        names = [n for n in sys.argv[2].split(",") if n]
+    if len(sys.argv) > 3:
+        names = [n for n in sys.argv[3].split(",") if n]
 
-    spark = get_spark("profile_r14")
+    spark = get_spark("profile_plans")
     registry = Q.queries()
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
